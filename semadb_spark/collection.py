@@ -1805,7 +1805,8 @@ class Collection:
         predicate scans over the bucketed snapshot, text legs via the
         persisted posting index (text_serve_local), vector legs via the
         exact NumPy scan (or the packed-graph beam with
-        ``vector_mode="graph"``), hybrid merge + shaping in pandas. The
+        ``vector_mode="graph"``), hybrid merge + shaping on NumPy row
+        positions. The
         reference's whole query lifecycle is exactly this one-process
         point-read (shard/shard.go:329-472: filter -> rank -> hybrid merge
         -> shape on the request thread); :meth:`search` remains the

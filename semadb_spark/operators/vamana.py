@@ -2977,8 +2977,9 @@ class VectorServePool:
             # queries — measured ~10% of mp16 throughput)
             fp_ttl_sec=300.0,
             # throughput tier: the pool already runs one process per core,
-            # so intra-query shard threads would only oversubscribe (r14;
-            # the 1-client latency tier keeps the default auto threads)
+            # so intra-query shard threads would only oversubscribe (r14).
+            # The 1-client tier is sequential by default too
+            # (shard_threads=None -> 1); it threads only when asked
             shard_threads=1,
         )
         # one single-process executor per worker: dispatch must target the

@@ -11,7 +11,8 @@ per-modality point-read tiers already exist (text_serve_local,
 vamana_serve_local, the serving pools); this module is the missing
 composition: it compiles the SAME query tree as
 :class:`~semadb_spark.plans.compiler.SearchEngine` but routes every leg
-through the local tiers and does the hybrid merge in pandas.
+through the local tiers and merges and shapes on NumPy arrays of row
+positions in the snapshot's canonical order.
 
 Semantics are pinned to the compiler (parity-tested per leaf kind and per
 composed shape):
@@ -33,12 +34,19 @@ composed shape):
   reference's actual serving shape, approximate by design (recall < 1), so
   it is opt-in rather than silently diverging from the engine's exact
   results.
-- hybrid ``_and``/``_or`` merge -> pandas groupby with the compiler's exact
-  rules (shard/index/search.go:248-297): duplicate ids sum hybrid scores,
-  first non-null distance/score by child index wins, ``_and`` drops ranked
-  rows outside the intersection.
-- shaping -> ranked-first ordering, user sort keys missing-last, offset/
-  limit, select with dotted re-nest (shard/shard.go:329-472 order).
+- every ranked leg is four arrays: canonical row positions, ``_distance``,
+  ``_score`` and ``_hybridScore`` (NaN = null). Vector routes carry the
+  positions of their resident rows; text and graph legs map their <= 75
+  result ids through the snapshot's id hash index once.
+- hybrid ``_and``/``_or`` merge -> ``np.unique``/``np.bincount`` over the
+  concatenated positions with the compiler's exact rules
+  (shard/index/search.go:248-297): duplicate ids sum hybrid scores, first
+  non-null distance/score by child index wins, ``_and`` drops ranked rows
+  outside the intersection.
+- shaping -> ranked-first ordering (hybrid desc, then a precomputed id
+  rank), user sort keys missing-last, offset/limit, point columns gathered
+  by position for the final page only, select with dotted re-nest
+  (shard/shard.go:329-472 order).
 
 - IVF-indexed float properties serve LOCALLY with engine parity (r12): the
   compiler's probe route is centroid-shortlist + exact rerank inside the
@@ -67,16 +75,12 @@ from __future__ import annotations
 import json
 import os
 from dataclasses import dataclass
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
 
 RANKED_COLS = ("_distance", "_score", "_hybridScore")
-
-# internal ranked-frame id column. Deliberately NOT "id": nothing reserves
-# "id" as a property name, so a collection may legally define one — the
-# helper must never collide with a user column in the final backfill merge.
-RID = "__rid"
 
 
 class LocalServeUnsupported(ValueError):
@@ -97,6 +101,43 @@ def _leaf_series(pdf: pd.DataFrame, prop: str) -> pd.Series:
     return s
 
 
+class _Ranked(NamedTuple):
+    """Ranked rows of one leg or merged subtree: row positions in the
+    snapshot's canonical order plus the three ranked columns (NaN = null).
+    Positions replace string ids on the request path — merge and shape are
+    integer gathers and sorts, never an object-id hash join."""
+
+    pos: np.ndarray  # int64 canonical row positions
+    distance: np.ndarray
+    score: np.ndarray
+    hybrid: np.ndarray
+
+    def take(self, idx) -> "_Ranked":
+        return _Ranked(*(a[idx] for a in self))
+
+
+def _first_valid(vals: np.ndarray, inv: np.ndarray, n: int) -> np.ndarray:
+    """Per group (``inv`` = group of each value), the first non-NaN value
+    in input order; NaN where a group has none."""
+    out = np.full(n, np.nan)
+    ok = ~np.isnan(vals)
+    groups, first = np.unique(inv[ok], return_index=True)
+    out[groups] = vals[ok][first]
+    return out
+
+
+def _with_leftovers(ranked: _Ranked, lo_pos: np.ndarray) -> _Ranked:
+    """Ranked rows followed by filter-only rows (null distance/score,
+    hybrid 0.0 — the engine's leftover defaults)."""
+    n = len(lo_pos)
+    return _Ranked(
+        np.concatenate([ranked.pos, lo_pos]),
+        np.concatenate([ranked.distance, np.full(n, np.nan)]),
+        np.concatenate([ranked.score, np.full(n, np.nan)]),
+        np.concatenate([ranked.hybrid, np.zeros(n)]),
+    )
+
+
 @dataclass
 class _LocalCompiled:
     """Local analogue of compiler.Compiled. Exactly one of ``pred`` /
@@ -104,26 +145,20 @@ class _LocalCompiled:
     needed_cols); ranked/mixed subtrees carry a boolean membership mask
     over the snapshot's canonical row order (set algebra on masks is O(n)
     bitwise, where id-set intersections were measured re-hashing
-    100k-element object sets per query) plus the scored frame."""
+    100k-element object sets per query) plus their ranked rows as
+    position arrays in that same order."""
 
     pred: tuple | None = None  # (fn(pdf)->bool ndarray, set[str] cols)
     mask: np.ndarray | None = None  # bool over canonical row order
-    ranked: pd.DataFrame | None = None  # RID, _distance, _score, _hybridScore
+    ranked: _Ranked | None = None
 
     @property
     def is_pure(self) -> bool:
         return self.pred is not None
 
 
-def _empty_ranked() -> pd.DataFrame:
-    return pd.DataFrame(
-        {
-            RID: pd.Series([], dtype=object),
-            "_distance": pd.Series([], dtype=float),
-            "_score": pd.Series([], dtype=float),
-            "_hybridScore": pd.Series([], dtype=float),
-        }
-    )
+_NO_RANKED = _Ranked(np.empty(0, dtype=np.int64), np.empty(0), np.empty(0),
+                     np.empty(0))
 
 
 class LocalSearchEngine:
@@ -338,7 +373,7 @@ class LocalSearchEngine:
         # there, inverted.go)
         self._code_cache: dict[tuple, tuple] = {}
         # canonical row order: id array / hash index / id-sorted permutation
-        # / pre-gathered sorted ids, built once per snapshot (lazy)
+        # / id rank, built once per snapshot (lazy)
         self._canon: tuple | None = None
 
     # -- snapshot scan --------------------------------------------------------
@@ -360,26 +395,33 @@ class LocalSearchEngine:
         tbl = self._dataset().to_table(columns=cols)
         return tbl.to_pandas()
 
-    def _col_frame(self, cols) -> pd.DataFrame:
-        """id + requested root columns off the resident column cache (full
-        snapshot order — pyarrow dataset scans are deterministic over the
-        pinned file list, so separately-scanned columns align). Assembled
-        frames are cached per column set: block-manager construction from
-        existing Series measured ~20 ms/call at 200k rows."""
-        wanted = tuple(
-            dict.fromkeys([self.id_col, *[c for c in cols if c != self.id_col]])
-        )
-        hit = self._frame_cache.get(wanted)
-        if hit is not None:
-            return hit
+    def _resident(self, cols) -> None:
+        """Decode the requested root columns not yet resident, once per
+        snapshot. Every column is a full scan in canonical order —
+        pyarrow dataset scans are deterministic over the pinned file
+        list, so separately-scanned columns line up row for row, and a
+        row position means the same row in every resident column."""
         missing = [
-            c for c in wanted
+            c for c in dict.fromkeys(cols)
             if c not in self._col_cache and c in self._frame_fields
         ]
         if missing:
             pdf = self._scan(missing)
             for c in missing:
                 self._col_cache[c] = pdf[c]
+
+    def _col_frame(self, cols) -> pd.DataFrame:
+        """id + requested root columns off the resident column cache (full
+        snapshot order, see :meth:`_resident`). Assembled frames are
+        cached per column set: block-manager construction from existing
+        Series measured ~20 ms/call at 200k rows."""
+        wanted = tuple(
+            dict.fromkeys([self.id_col, *[c for c in cols if c != self.id_col]])
+        )
+        hit = self._frame_cache.get(wanted)
+        if hit is not None:
+            return hit
+        self._resident(wanted)
         frame = pd.DataFrame(
             {c: self._col_cache[c] for c in wanted if c in self._col_cache}
         )
@@ -419,33 +461,46 @@ class LocalSearchEngine:
             self._code_cache[key] = hit
         return hit
 
-    def _canonical_ids(self) -> tuple[np.ndarray, pd.Index, np.ndarray]:
-        """(ids_all, hash index, argsort permutation) over the canonical
-        snapshot row order — the one-time state every mask operates in.
-        The argsort is what makes default-order paging O(page): filter-only
-        rows order by id asc, so 'sorted ids where mask' is a gather
-        through the precomputed permutation, never a per-query sort."""
+    def _canonical_ids(self) -> tuple[np.ndarray, pd.Index, np.ndarray,
+                                      np.ndarray]:
+        """(ids_all, hash index, id-sorted permutation, id rank) over the
+        canonical snapshot row order — the one-time state every mask and
+        position array operates in. The permutation makes default-order
+        paging O(page): filter-only rows order by id asc, so 'sorted rows
+        where mask' is a gather, never a per-query sort. ``rank[pos]`` is
+        a row's place in id order, so every (key, id asc) tie-break is an
+        integer lexsort instead of a string compare."""
         if self._canon is None:
             ids_all = self._col_frame([])[self.id_col].to_numpy(dtype=object)
             order = np.argsort(ids_all, kind="stable")
-            self._canon = (ids_all, pd.Index(ids_all), order, ids_all[order])
-        return self._canon[:3]
+            rank = np.empty(len(order), dtype=np.int64)
+            rank[order] = np.arange(len(order))
+            self._canon = (ids_all, pd.Index(ids_all), order, rank)
+        return self._canon
 
-    def _rows_for_ids(self, ids: np.ndarray) -> pd.DataFrame:
-        """Point-read full rows for a bounded id page — a positional gather
-        off the resident columns. The first call decodes each column once
-        (the reference's decode-once shard cache, cache/manager.go: a
-        serving node HOLDS its shard); per-query parquet point-reads were
-        measured at ~60 ms/page because a 10-id page touches ~10 bucket
-        files and parquet decodes whole row groups, body bytes included."""
-        if len(ids) == 0:
-            return pd.DataFrame(
-                {c: pd.Series([], dtype=object) for c in self._frame_fields}
-            )
-        pdf = self._col_frame(self._frame_fields)
-        _, index, _ = self._canonical_ids()
-        pos = index.get_indexer(np.asarray(ids, dtype=object))
-        return pdf.iloc[pos[pos >= 0]].reset_index(drop=True)
+    def _positions(self, ids) -> np.ndarray:
+        """Ids -> canonical row positions, -1 for an id outside the
+        snapshot (one hash lookup per id)."""
+        return self._canonical_ids()[1].get_indexer(np.asarray(ids, dtype=object))
+
+    def _mask_at(self, pos: np.ndarray) -> np.ndarray:
+        mask = np.zeros(len(self._canonical_ids()[0]), dtype=bool)
+        mask[pos] = True
+        return mask
+
+    def _rows_at(self, pos: np.ndarray) -> dict:
+        """Point columns for the final page, gathered by position off the
+        resident columns. The first call decodes each column once (the
+        reference's decode-once shard cache, cache/manager.go: a serving
+        node HOLDS its shard); per-query parquet point-reads were measured
+        at ~60 ms/page because a 10-id page touches ~10 bucket files and
+        parquet decodes whole row groups, body bytes included. ``take``
+        keeps each column's dtype, so an empty page is typed like a full
+        one."""
+        self._resident(self._frame_fields)
+        return {
+            c: self._col_cache[c].array.take(pos) for c in self._frame_fields
+        }
 
     # -- public API -----------------------------------------------------------
 
@@ -633,23 +688,15 @@ class LocalSearchEngine:
 
     # -- ranked leaves ---------------------------------------------------------
 
-    def _mask_for_ids(self, ids) -> np.ndarray:
-        """Bounded id list -> membership mask over the canonical order."""
-        ids_all, index, _ = self._canonical_ids()
-        mask = np.zeros(len(ids_all), dtype=bool)
-        pos = index.get_indexer(np.asarray(ids, dtype=object))
-        mask[pos[pos >= 0]] = True
-        return mask
-
-    def _candidate_ids(self, filter_query: dict | None) -> np.ndarray | None:
-        """R4 pre-filter -> candidate id array (computed BEFORE ranking)."""
+    def _candidate_mask(self, filter_query: dict | None) -> np.ndarray | None:
+        """R4 pre-filter -> candidate mask over the canonical row order
+        (computed BEFORE ranking)."""
         if filter_query is None:
             return None
-        ids_all, _, _ = self._canonical_ids()
-        return ids_all[self._mask_of(self.compile(filter_query))]
+        return self._mask_of(self.compile(filter_query))
 
     def _vec_matrix(self, prop: str) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-        """(ids, X float64, row_norms²) for the exact scan, cached per
+        """(pos, X float64, row_norms²) for the exact scan, cached per
         snapshot — the local analogue of the engine's one-scan-per-query
         over the parquet (here the decode happens once and every query is
         a GEMM). Row norms are precomputed: building the 200k x d squared
@@ -659,34 +706,32 @@ class LocalSearchEngine:
             return hit
         root = prop.split(".", 1)[0]
         # direct scan, NOT the column cache: the raw list column would sit
-        # in _col_cache next to the packed matrix it exists to build
-        pdf = self._scan([self.id_col, root])
-        vals = _leaf_series(pdf, prop)
+        # in _col_cache next to the packed matrix it exists to build. The
+        # scan is in canonical order, so row i of it IS position i.
+        vals = _leaf_series(self._scan([root]), prop)
         mask = vals.notna().to_numpy()
-        ids = pdf[self.id_col].to_numpy(dtype=object)[mask]
         X = np.stack(
             [np.asarray(v, dtype=np.float64) for v in vals.to_numpy()[mask]]
         ) if mask.any() else np.zeros((0, 1))
-        self._vec_cache[prop] = (ids, X, (X * X).sum(axis=1))
+        self._vec_cache[prop] = (np.flatnonzero(mask), X, (X * X).sum(axis=1))
         return self._vec_cache[prop]
 
     def _exact_topk(
         self, prop: str, vector, metric: str, limit: int,
         candidates: np.ndarray | None,
-    ) -> pd.DataFrame:
+    ) -> tuple[np.ndarray, np.ndarray]:
         """Exact top-k over the cached matrix — same semantics as the
         compiler's knn route (distance asc, id asc tiebreak), including
         the D8 bit-metric auto-binarize at 0.5
         (shard/vectorstore/vectorstore.go:51-73)."""
         from semadb_spark.functions.distances import numpy_distance_matrix
 
-        ids, X, n2 = self._vec_matrix(prop)
+        pos, X, n2 = self._vec_matrix(prop)
         if candidates is not None:
-            # hash-based membership (np.isin argsorts object ids)
-            keep = pd.Series(ids).isin(candidates).to_numpy()
-            ids, X, n2 = ids[keep], X[keep], n2[keep]
-        if len(ids) == 0:
-            return _empty_ranked().drop(columns=["_score", "_hybridScore"])
+            keep = candidates[pos]
+            pos, X, n2 = pos[keep], X[keep], n2[keep]
+        if len(pos) == 0:
+            return pos, np.empty(0)
         q = np.asarray(vector, dtype=np.float64)
         if metric in ("hamming", "jaccard"):
             from semadb_spark.operators.quantize import encode_bits_np
@@ -695,9 +740,9 @@ class LocalSearchEngine:
             if hit is None or candidates is not None:
                 codes = encode_bits_np(X, np.asarray(0.5))
                 if candidates is None:
-                    self._d8_cache[prop] = (ids, codes)
+                    self._d8_cache[prop] = (pos, codes)
             else:
-                ids, codes = hit
+                pos, codes = hit
             qc = encode_bits_np(q[None, :], np.asarray(0.5))
             d = numpy_distance_matrix(metric, codes, qc)[:, 0].astype(np.float64)
         elif metric == "euclidean":
@@ -711,51 +756,61 @@ class LocalSearchEngine:
             d = 1.0 - X @ q
         else:
             d = numpy_distance_matrix(metric, X, q[None, :])[:, 0]
-        return self._take_topk(ids, d, limit)
+        return self._take_topk(pos, d, limit)
 
-    @staticmethod
-    def _take_topk(ids: np.ndarray, d: np.ndarray, limit: int) -> pd.DataFrame:
+    def _take_topk(self, pos: np.ndarray, d: np.ndarray,
+                   limit: int) -> tuple[np.ndarray, np.ndarray]:
         """(distance asc, id asc) top-k over precomputed distances — the
-        shared tail of the exact and IVF routes. Top-k selection before
-        the sort: partition to the distance threshold, keep boundary ties
-        so the order and truncation match a full sort exactly."""
+        shared tail of the exact, IVF and code-scan routes. Top-k
+        selection before the sort: partition to the distance threshold,
+        keep boundary ties so the order and truncation match a full sort
+        exactly; the id tie-break is the precomputed id rank."""
         k = int(limit)
         if len(d) > 4 * k:
             thr = d[np.argpartition(d, k - 1)[:k]].max()
             sel = d <= thr
-            ids, d = ids[sel], d[sel]
-        out = pd.DataFrame({RID: ids, "_distance": d})
-        return (
-            out.sort_values(["_distance", RID], kind="stable")
-            .head(k)
-            .reset_index(drop=True)
-        )
+            pos, d = pos[sel], d[sel]
+        o = np.lexsort((self._canonical_ids()[3][pos], d))[:k]
+        return pos[o], d[o]
+
+    def _hits_topk(self, hits) -> tuple[np.ndarray, np.ndarray]:
+        """Graph-beam ``[(id, distance)]`` hits -> (pos, distance)."""
+        pos = self._positions([i for i, _ in hits])
+        d = np.asarray([float(dd) for _, dd in hits], dtype=np.float64)
+        return pos[pos >= 0], d[pos >= 0]
+
+    def _artifact_rows(self, path: str, columns: list[str], **kw) -> tuple:
+        """(canonical positions, pandas rows) of a persisted index
+        artifact. Artifacts are version-pinned to this snapshot, so every
+        id has a row; an id outside it would have no row to serve and is
+        dropped, as the engine's join back onto the snapshot drops it."""
+        import pyarrow.dataset as pads
+
+        pdf = pads.dataset(path, format="parquet", **kw).to_table(
+            columns=[self.id_col, *columns]
+        ).to_pandas()
+        pos = self._positions(pdf[self.id_col])
+        return pos[pos >= 0], pdf[pos >= 0]
 
     def _qscan_state(self, prop: str) -> tuple:
-        """(ids, codes int64 matrix) resident rows of the persisted
+        """(pos, codes int64 matrix) resident rows of the persisted
         quantized-code artifact — what the ENGINE's flat code scan ranks
         (quantized_topk over q_index.codes), loaded once per snapshot."""
         hit = self._qscan_cache.get(prop)
         if hit is None:
-            import pyarrow.dataset as pads
-
-            meta = self.qscan[prop]["meta"]
-            dset = pads.dataset(self.qscan[prop]["path"], format="parquet")
-            pdf = dset.to_table(
-                columns=[self.id_col, meta["code_col"]]
-            ).to_pandas()
-            pdf = pdf[pdf[meta["code_col"]].notna()]
-            ids = pdf[self.id_col].to_numpy(dtype=object)
+            code_col = self.qscan[prop]["meta"]["code_col"]
+            pos, pdf = self._artifact_rows(self.qscan[prop]["path"], [code_col])
+            keep = pdf[code_col].notna().to_numpy()
+            pos, pdf = pos[keep], pdf[keep]
             codes = np.stack(
-                [np.asarray(c, dtype=np.int64)
-                 for c in pdf[meta["code_col"]]]
+                [np.asarray(c, dtype=np.int64) for c in pdf[code_col]]
             ) if len(pdf) else np.zeros((0, 1), dtype=np.int64)
-            hit = (ids, codes)
+            hit = (pos, codes)
             self._qscan_cache[prop] = hit
         return hit
 
     def _qscan_topk(self, prop: str, vector, limit: int,
-                    candidates: np.ndarray | None) -> pd.DataFrame:
+                    candidates: np.ndarray | None) -> tuple:
         """The compiler's flat quantized code-scan route in-process: binary
         encodes the query with the frozen thresholds and ranks by the
         declared bit metric; product ranks by the ADC table — identical
@@ -766,12 +821,12 @@ class LocalSearchEngine:
         from semadb_spark.functions.distances import numpy_distance_matrix
 
         meta = self.qscan[prop]["meta"]
-        ids, codes = self._qscan_state(prop)
+        pos, codes = self._qscan_state(prop)
         if candidates is not None:
-            m = pd.Series(ids).isin(candidates).to_numpy()
-            ids, codes = ids[m], codes[m]
-        if len(ids) == 0:
-            return _empty_ranked().drop(columns=["_score", "_hybridScore"])
+            m = candidates[pos]
+            pos, codes = pos[m], codes[m]
+        if len(pos) == 0:
+            return pos, np.empty(0)
         if meta["kind"] == "binary":
             from semadb_spark.operators.quantize import encode_bits_np
 
@@ -798,24 +853,19 @@ class LocalSearchEngine:
                 # sequential accumulation i=0..m-1 mirrors the engine's
                 # aggregate() left fold bit-for-bit
                 d += table[i, codes[:, i]]
-        return self._take_topk(ids, d, limit)
+        return self._take_topk(pos, d, limit)
 
     def _ivf_state(self, prop: str) -> tuple:
-        """(ids, X float64, row_norms², centroid_id) resident rows of the
+        """(pos, X float64, row_norms², centroid_id) resident rows of the
         persisted IVF artifact — what the ENGINE probes and reranks
         (ivf_search runs over index.assigned, not the base table), loaded
         once per snapshot like the exact route's `_vec_matrix`."""
         hit = self._ivf_cache.get(prop)
         if hit is None:
-            import pyarrow.dataset as pads
-
-            dset = pads.dataset(
-                self.ivf[prop]["path"], format="parquet", partitioning="hive"
+            pos, pdf = self._artifact_rows(
+                self.ivf[prop]["path"], ["v", "centroid_id"],
+                partitioning="hive",
             )
-            pdf = dset.to_table(
-                columns=[self.id_col, "v", "centroid_id"]
-            ).to_pandas()
-            ids = pdf[self.id_col].to_numpy(dtype=object)
             X = np.stack(
                 [np.asarray(x, dtype=np.float64) for x in pdf["v"]]
             ) if len(pdf) else np.zeros((0, 1))
@@ -827,13 +877,13 @@ class LocalSearchEngine:
             # parity is free: _take_topk orders by (distance, id), so
             # candidate order never matters.
             order = np.argsort(cent, kind="stable")
-            ids, X, cent = ids[order], np.ascontiguousarray(X[order]), cent[order]
-            hit = (ids, X, (X * X).sum(axis=1), cent)
+            pos, X, cent = pos[order], np.ascontiguousarray(X[order]), cent[order]
+            hit = (pos, X, (X * X).sum(axis=1), cent)
             self._ivf_cache[prop] = hit
         return hit
 
     def _ivf_topk(self, prop: str, vector, value, opts: dict, limit: int,
-                  candidates: np.ndarray | None) -> pd.DataFrame:
+                  candidates: np.ndarray | None) -> tuple:
         """The compiler's float IVF probe route served in-process: same
         centroid shortlist math (argsort of the metric's centroid
         distances, nprobe = search_size // 8), same exact float64 rerank
@@ -845,7 +895,7 @@ class LocalSearchEngine:
 
         metric = value.distance_metric
         if candidates is not None:
-            if len(candidates) <= FILTERED_EXACT_FALLBACK_ROWS:
+            if np.count_nonzero(candidates) <= FILTERED_EXACT_FALLBACK_ROWS:
                 # engine takes the exact scan over the filtered base here
                 return self._exact_topk(prop, vector, metric, limit, candidates)
             if prop in self._graph_artifacts:
@@ -860,7 +910,7 @@ class LocalSearchEngine:
         search_size = int(
             opts.get("searchSize") or value.params.get("searchSize") or 75
         )
-        ids, X, n2, cent = self._ivf_state(prop)
+        pos, X, n2, cent = self._ivf_state(prop)
         centroids = self.ivf[prop]["centroids"]
         nprobe = max(1, min(len(centroids), search_size // 8))
         q = np.asarray(vector, dtype=np.float64)
@@ -868,12 +918,12 @@ class LocalSearchEngine:
         probed = np.argsort(cdist)[:nprobe]
         # rows are centroid-sorted (_ivf_state): each probed cell is one
         # contiguous slice — distances run as BLAS on views, and only the
-        # probed cells' ids/distances are ever materialized (the r12 path
-        # masked the FULL matrix per query: O(corpus) isin + a big fancy-
-        # index copy, 73% of the measured 13.7 ms point-read)
+        # probed cells' positions/distances are ever materialized (the r12
+        # path masked the FULL matrix per query: O(corpus) isin + a big
+        # fancy-index copy, 73% of the measured 13.7 ms point-read)
         los = np.searchsorted(cent, probed, side="left")
         his = np.searchsorted(cent, probed, side="right")
-        id_parts: list = []
+        pos_parts: list = []
         d_parts: list = []
         for lo, hi in zip(los, his):
             if lo == hi:
@@ -887,18 +937,18 @@ class LocalSearchEngine:
                 dd = 1.0 - Xs @ q
             else:
                 dd = numpy_distance_matrix(metric, Xs, q[None, :])[:, 0]
-            id_parts.append(ids[lo:hi])
+            pos_parts.append(pos[lo:hi])
             d_parts.append(dd)
-        if not id_parts:
-            return _empty_ranked().drop(columns=["_score", "_hybridScore"])
-        ids = np.concatenate(id_parts)
+        if not pos_parts:
+            return np.empty(0, dtype=np.int64), np.empty(0)
+        pos = np.concatenate(pos_parts)
         d = np.concatenate(d_parts)
         if candidates is not None:
-            m = pd.Series(ids).isin(candidates).to_numpy()
-            ids, d = ids[m], d[m]
-        if len(ids) == 0:
-            return _empty_ranked().drop(columns=["_score", "_hybridScore"])
-        return self._take_topk(ids, d, limit)
+            m = candidates[pos]
+            pos, d = pos[m], d[m]
+        if len(pos) == 0:
+            return pos, d
+        return self._take_topk(pos, d, limit)
 
     def _compile_vector(self, prop: str, query: dict, value) -> _LocalCompiled:
         key = "vectorFlat" if value.type == "vectorFlat" else "vectorVamana"
@@ -935,7 +985,7 @@ class LocalSearchEngine:
                 f"property {prop} serves through a distributed route "
                 f"({self.unsupported_vec[prop]}); use Collection.search"
             )
-        candidates = self._candidate_ids(opts.get("filter"))
+        candidates = self._candidate_mask(opts.get("filter"))
         graph = self.graph.get(prop)
         quantized_graph = (
             key == "vectorVamana"
@@ -985,12 +1035,7 @@ class LocalSearchEngine:
                 # re-walking cost ~10% of pool throughput)
                 fp_ttl_sec=3600.0,
             )
-            topk = pd.DataFrame(
-                {
-                    RID: [i for i, _ in hits],
-                    "_distance": [float(dd) for _, dd in hits],
-                }
-            )
+            topk = self._hits_topk(hits)
         elif (
             self.vector_mode == "graph"
             and key == "vectorVamana"
@@ -1023,12 +1068,7 @@ class LocalSearchEngine:
                 n_seeds=32,
                 fp_ttl_sec=3600.0,  # snapshot-pinned engine, see above
             )
-            topk = pd.DataFrame(
-                {
-                    RID: [i for i, _ in hits],
-                    "_distance": [float(dd) for _, dd in hits],
-                }
-            )
+            topk = self._hits_topk(hits)
         elif prop in self.qscan and value.quantizer is not None:
             # ENGINE parity: a schema-declared quantizer with persisted
             # codes (and no fused IVF artifact) serves EVERY query on the
@@ -1048,11 +1088,9 @@ class LocalSearchEngine:
             topk = self._exact_topk(
                 prop, vector, value.distance_metric, limit, candidates
             )
-        ranked = topk.assign(
-            _score=np.nan,
-            _hybridScore=-1.0 * weight * topk["_distance"].to_numpy(),
-        )
-        return _LocalCompiled(mask=self._mask_for_ids(ranked[RID]), ranked=ranked)
+        pos, d = topk
+        ranked = _Ranked(pos, d, np.full(len(d), np.nan), -1.0 * weight * d)
+        return _LocalCompiled(mask=self._mask_at(ranked.pos), ranked=ranked)
 
     def _compile_text(self, prop: str, query: dict, value) -> _LocalCompiled:
         opts = query.get("text")
@@ -1078,16 +1116,20 @@ class LocalSearchEngine:
         from semadb_spark.operators.text_search import text_serve_local
 
         path, num_docs = self.text[prop]
-        cand = self._candidate_ids(opts.get("filter"))
+        cand = self._candidate_mask(opts.get("filter"))
         scored = text_serve_local(
             path, opts["value"], opts["operator"], limit=limit,
             weight=weight, num_docs=num_docs,
-            candidate_ids=None if cand is None else cand,
+            candidate_ids=None if cand is None else self._canonical_ids()[0][cand],
         )
-        ranked = scored.rename(columns={"id": RID}).assign(_distance=np.nan)[
-            [RID, "_distance", "_score", "_hybridScore"]
-        ]
-        return _LocalCompiled(mask=self._mask_for_ids(ranked[RID]), ranked=ranked)
+        pos = self._positions(scored["id"])
+        keep = pos >= 0
+        ranked = _Ranked(
+            pos[keep], np.full(int(keep.sum()), np.nan),
+            scored["_score"].to_numpy(dtype=np.float64)[keep],
+            scored["_hybridScore"].to_numpy(dtype=np.float64)[keep],
+        )
+        return _LocalCompiled(mask=self._mask_at(ranked.pos), ranked=ranked)
 
     # -- boolean composition (B1-B3) -------------------------------------------
 
@@ -1138,38 +1180,23 @@ class LocalSearchEngine:
             else:
                 final |= m
 
-        ranked_frames = [
-            c.ranked.assign(_src=i)
-            for i, c in enumerate(children)
-            if c.ranked is not None
-        ]
+        legs = [c.ranked for c in children if c.ranked is not None]
         merged = None
-        if ranked_frames:
-            u = pd.concat(ranked_frames, ignore_index=True)
-            # duplicate ids: sum hybrid scores; first (lowest child index)
+        if legs:
+            # concatenated in child order, so "first" below means lowest
+            # child index: duplicate rows sum hybrid scores, the first
             # non-null distance/score wins (search.go:255-289)
-            u = u.sort_values("_src", kind="stable")
-            hybrid = u.groupby(RID, sort=False)["_hybridScore"].sum()
-            dist = (
-                u.dropna(subset=["_distance"])
-                .groupby(RID, sort=False)["_distance"]
-                .first()
+            pos, dist, score, hybrid = (np.concatenate(a) for a in zip(*legs))
+            upos, inv = np.unique(pos, return_inverse=True)
+            merged = _Ranked(
+                upos,
+                _first_valid(dist, inv, len(upos)),
+                _first_valid(score, inv, len(upos)),
+                np.bincount(inv, weights=hybrid, minlength=len(upos)),
             )
-            score = (
-                u.dropna(subset=["_score"])
-                .groupby(RID, sort=False)["_score"]
-                .first()
-            )
-            merged = pd.DataFrame({RID: hybrid.index.to_numpy(dtype=object)})
-            merged["_distance"] = dist.reindex(hybrid.index).to_numpy()
-            merged["_score"] = score.reindex(hybrid.index).to_numpy()
-            merged["_hybridScore"] = hybrid.to_numpy()
             if conjunction:
                 # _and drops ranked rows outside the intersection
-                _, index, _ = self._canonical_ids()
-                pos = index.get_indexer(merged[RID].to_numpy(dtype=object))
-                keep = (pos >= 0) & final[np.maximum(pos, 0)]
-                merged = merged[keep].reset_index(drop=True)
+                merged = merged.take(final[upos])
         return _LocalCompiled(mask=final, ranked=merged)
 
     # -- assembly + shaping (P1-P3, B4) ----------------------------------------
@@ -1177,20 +1204,18 @@ class LocalSearchEngine:
     def _assemble_and_shape(
         self, compiled: _LocalCompiled, request: dict
     ) -> pd.DataFrame:
-        # 1) membership mask + ranked frame (ordered hybrid-desc/id-asc)
-        ids_all, index, id_order = self._canonical_ids()
+        # 1) membership mask + ranked rows ordered hybrid desc / id asc
+        _, _, id_order, rank = self._canonical_ids()
         if compiled.is_pure:
-            mask = self._mask_of(compiled)
-            ranked = None
+            mask, ranked = self._mask_of(compiled), None
         else:
             mask, ranked = compiled.mask, compiled.ranked
-        if ranked is not None and len(ranked):
-            ranked = ranked.sort_values(
-                ["_hybridScore", RID], ascending=[False, True], kind="stable"
-            ).reset_index(drop=True)
-            leftover_mask = mask & ~self._mask_for_ids(ranked[RID])
+        if ranked is not None and len(ranked.pos):
+            ranked = ranked.take(np.lexsort((rank[ranked.pos], -ranked.hybrid)))
+            leftover_mask = mask.copy()
+            leftover_mask[ranked.pos] = False
         else:
-            ranked = None
+            ranked = _NO_RANKED
             leftover_mask = mask
 
         sort_opts = request.get("sort") or []
@@ -1209,58 +1234,34 @@ class LocalSearchEngine:
 
         offset = int(request.get("offset", 0))
         limit = request["limit"] if "limit" in request else 10
+        stop = None if limit is None else offset + int(limit)
+        n_ranked = len(ranked.pos)
         if not user_cols:
             # default order = ranked rows (already sorted), then filter-only
             # rows id-asc; paging is a GATHER through the precomputed
             # id-sorted permutation — no per-query sort of the filter set
             # (the local analogue of TakeOrderedAndProject's bounded trim)
-            need = None if limit is None else offset + int(limit)
-            ids_sorted = self._canon[3]
             sel = np.flatnonzero(leftover_mask[id_order])
-            n_ranked = 0 if ranked is None else len(ranked)
-            if need is not None:
-                sel = sel[: max(0, need - min(n_ranked, need))]
-            lo_sorted = ids_sorted[sel]
-            leftover = pd.DataFrame({RID: lo_sorted})
-            leftover["_distance"] = np.nan
-            leftover["_score"] = np.nan
-            leftover["_hybridScore"] = 0.0
-            parts = [ranked, leftover] if ranked is not None else [leftover]
-            ordered = pd.concat(parts, ignore_index=True)
-            if limit is not None:
-                ordered = ordered.iloc[offset : offset + int(limit)]
-            elif offset:
-                ordered = ordered.iloc[offset:]
+            if stop is not None:
+                sel = sel[: max(0, stop - min(n_ranked, stop))]
+            ordered = _with_leftovers(ranked, id_order[sel])
         else:
             # user sort keys take precedence with missing-last
             # (utils/compare.go:56-89); sort values come from the resident
             # column cache by POSITION (no rescans). The full candidate
             # set sorts here — the same work the engine's distributed sort
             # does for a user-ordered result.
-            lo_pos = np.flatnonzero(leftover_mask)
-            skel_frames = []
-            if ranked is not None:
-                r = ranked.copy()
-                r["_rankedFirst"] = 0
-                r["__pos"] = index.get_indexer(r[RID].to_numpy(dtype=object))
-                skel_frames.append(r)
-            lo = pd.DataFrame({RID: ids_all[lo_pos]})
-            lo["_distance"] = np.nan
-            lo["_score"] = np.nan
-            lo["_hybridScore"] = 0.0
-            lo["_rankedFirst"] = 1
-            lo["__pos"] = lo_pos
-            skel_frames.append(lo)
-            key = pd.concat(skel_frames, ignore_index=True)
+            ordered = _with_leftovers(ranked, np.flatnonzero(leftover_mask))
+            key = pd.DataFrame({
+                "_rankedFirst": np.arange(len(ordered.pos)) >= n_ranked,
+                "_hybridScore": ordered.hybrid,
+                "_idRank": rank[ordered.pos],
+            })
             by, asc = [], []
+            self._resident([sp.split(".", 1)[0] for sp, _ in user_cols])
             for sp, desc in user_cols:
                 root = sp.split(".", 1)[0]
-                self._col_frame([root])  # ensure residency
-                col = self._col_cache[root]
-                pos = key["__pos"].to_numpy()
-                sv = pd.Series(
-                    col.to_numpy()[np.maximum(pos, 0)], index=key.index
-                ).where(pos >= 0)
+                sv = pd.Series(self._col_cache[root].to_numpy()[ordered.pos])
                 if "." in sp:
                     sv = _leaf_series(pd.DataFrame({root: sv}), sp)
                 kn, mn = f"__k_{sp}", f"__m_{sp}"
@@ -1270,30 +1271,20 @@ class LocalSearchEngine:
                 key[mn] = sv.isna().astype(int)
                 by.extend([mn, kn])
                 asc.extend([True, not desc])
-            by.extend(["_rankedFirst", "_hybridScore", RID])
+            by.extend(["_rankedFirst", "_hybridScore", "_idRank"])
             asc.extend([True, False, True])
-            ordered = key.sort_values(by, ascending=asc, kind="stable")[
-                [RID, "_distance", "_score", "_hybridScore"]
-            ]
-            if limit is not None:
-                ordered = ordered.iloc[offset : offset + int(limit)]
-            elif offset:
-                ordered = ordered.iloc[offset:]
-        ordered = ordered.reset_index(drop=True)
+            ordered = ordered.take(
+                key.sort_values(by, ascending=asc, kind="stable").index.to_numpy()
+            )
+        page = ordered.take(slice(offset, stop))
 
-        # 4) backfill point data for the final page only. The join key is
-        # the reserved RID helper, so a user property legally named "id"
-        # (or anything else in the frame) can never be shadowed by
-        # engine-internal values in the output.
-        rows = self._rows_for_ids(ordered[RID].to_numpy(dtype=object))
-        out = ordered.merge(
-            rows, left_on=RID, right_on=self.id_col, how="left",
-        )
-        # engine column order: point columns, then ranked cols (RID dropped)
-        cols = [c for c in self._frame_fields] + list(RANKED_COLS)
-        out = out[[c for c in cols if c in out.columns]]
+        # 2) the output frame, built once: point columns gathered at the
+        # page's positions, then the ranked columns (engine column order)
+        cols = self._rows_at(page.pos)
+        cols.update(zip(RANKED_COLS, page[1:]))
+        out = pd.DataFrame(cols)
 
-        # 5) select + dotted re-nest (shard.go:431-448)
+        # 3) select + dotted re-nest (shard.go:431-448)
         select = request.get("select")
         if select and select != ["*"] and "*" not in select:
             keep = [self.id_col]

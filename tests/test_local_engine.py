@@ -762,3 +762,192 @@ def test_preload_graph_artifacts_and_pool_preload(spark, tmp_path):
         got = pool.search(req)
     assert got["_id"].tolist() == cold["_id"].tolist()
     assert np.allclose(got["_distance"], cold["_distance"])
+
+
+SERVE_SCHEMA = {
+    "body": {"type": "text", "text": {"analyser": "standard"}},
+    "lang": {"type": "string", "string": {"caseSensitive": True}},
+    "n": {"type": "integer", "integer": {}},
+    "v": {"type": "vectorVamana", "vectorVamana": {
+        "vectorSize": 8, "distanceMetric": "euclidean",
+        "searchSize": 40, "degreeBound": 32, "alpha": 1.2}},
+}
+
+
+@pytest.fixture(scope="module")
+def serve_coll(spark, tmp_path_factory):
+    """The serving benchmark's collection in miniature: text index + IVF
+    artifact, a string and an integer filter column. Doc 17 alone holds
+    the term "zebra", so a text leg on it and a vector leg at its vector
+    both rank p017."""
+    rng = np.random.RandomState(17)
+    X = rng.normal(size=(240, 8))
+    rows = [
+        Row(_id=f"p{i:03d}",
+            body=" ".join(WORDS[(i * 7 + j) % 10] for j in range(2 + i % 4))
+            + (" zebra" if i == 17 else ""),
+            lang=["en", "de", "fr"][i % 3], n=int(i % 50),
+            v=[float(x) for x in X[i]])
+        for i in range(240)
+    ]
+    c = Collection.create(spark, str(tmp_path_factory.mktemp("serve") / "c"),
+                          SERVE_SCHEMA, num_buckets=4)
+    c.insert(spark.createDataFrame(rows))
+    c.build_text_index()
+    c.build_vector_index("v", nlist=8)
+    return c, X
+
+
+def _vec_leg(X, j, w=None, **kw):
+    leg = {"vector": [float(x) for x in X[j]], "limit": 10, **kw}
+    if w is not None:
+        leg["weight"] = w
+    return {"property": "v", "vectorVamana": leg}
+
+
+def _text_leg(value, w=None):
+    leg = {"operator": "containsAny", "value": value, "limit": 10}
+    if w is not None:
+        leg["weight"] = w
+    return {"property": "body", "text": leg}
+
+
+def test_serve_shapes_parity_with_ivf_and_pool(serve_coll, monkeypatch):
+    """The six serving shapes over a text + IVF collection: values and
+    dtypes match route='spark', and the process pool returns the same
+    frames as the in-process engine. Also: an id in both legs of an _or,
+    two vector legs ranking the same rows, a page crossing from ranked
+    into filter-only rows, and a leg-level vector filter on both sides of
+    FILTERED_EXACT_FALLBACK_ROWS."""
+    import pandas as pd
+
+    import semadb_spark.plans.compiler as compiler_mod
+
+    coll, X = serve_coll
+    rng_ = {"property": "n", "integer": {
+        "operator": "inRange", "value": 5, "endValue": 30}}
+    lang = {"property": "lang", "string": {"operator": "equals", "value": "de"}}
+    # near X[17], so p017 tops the vector leg at a nonzero distance
+    near = X.copy()
+    near[[17, 45]] += 0.05
+    both_text, both_vec = _text_leg("zebra", 0.7), _vec_leg(near, 17, 0.3)
+    reqs = {
+        "text": {"query": _text_leg("merge join"), "limit": 10},
+        "vector": {"query": _vec_leg(X, 40), "limit": 10},
+        "filter_vector": {"query": {"property": "_and", "_and": [
+            rng_, _vec_leg(X, 41)]}, "limit": 10},
+        "text_vector": {"query": {"property": "_or", "_or": [
+            both_text, both_vec]}, "limit": 10},
+        "filter_text": {"query": {"property": "_and", "_and": [
+            rng_, _text_leg("scan stream")]}, "limit": 10},
+        "tree": {"query": {"property": "_and", "_and": [lang, {
+            "property": "_or", "_or": [_text_leg("spark window", 0.5),
+                                       _vec_leg(X, 42, 0.5)]}]}, "limit": 10},
+        # two vector legs rank the same rows at different distances: the
+        # first child's distance wins
+        "two_vectors": {"query": {"property": "_or", "_or": [
+            _vec_leg(X, 45), _vec_leg(near, 45, 2.0)]}, "limit": 15},
+        # the page crosses from the 5 ranked rows into filter-only rows
+        "offset_cross": {"query": {"property": "_or", "_or": [
+            {"property": "n", "integer": {"operator": "lessThan",
+                                          "value": 4}},
+            _vec_leg(X, 43, limit=5)]}, "limit": 6, "offset": 3},
+    }
+    local = {}
+    for name, req in reqs.items():
+        got = assert_parity(coll, req)
+        want = coll.search(req).toPandas()
+        assert len(got) > 0, name
+        assert list(got.columns) == list(want.columns), name
+        assert got.dtypes.to_dict() == want.dtypes.to_dict(), name
+        local[name] = got
+    # hybrid scores sum; distance from the vector child, score from text
+    both = local["text_vector"].set_index("_id").loc["p017"]
+    t = coll.search_local({"query": both_text}).set_index("_id").loc["p017"]
+    v = coll.search_local({"query": both_vec}).set_index("_id").loc["p017"]
+    assert both["_distance"] == v["_distance"] > 0
+    assert both["_score"] == t["_score"]
+    assert both["_hybridScore"] == pytest.approx(
+        t["_hybridScore"] + v["_hybridScore"])
+    page = local["offset_cross"]
+    assert page["_distance"].notna().sum() == 2  # ranked rows 3-4 of 5
+    assert (page["_hybridScore"].iloc[2:] == 0.0).all()
+    with coll.open_search_pool(workers=2) as pool:
+        pooled = pool.search_many(list(reqs.values()))
+    for name, frame in zip(reqs, pooled):
+        pd.testing.assert_frame_equal(frame, local[name])
+    # leg-level filter: ~34 candidates take the bounded exact scan, ~150
+    # the IVF probe restricted to the candidates
+    monkeypatch.setattr(compiler_mod, "FILTERED_EXACT_FALLBACK_ROWS", 40)
+    coll._invalidate_engine()
+    for hi in (7, 30):
+        assert len(assert_parity(coll, {"query": _vec_leg(X, 44, filter={
+            "property": "n", "integer": {"operator": "lessThan",
+                                         "value": hi}}), "limit": 10})) > 0
+
+
+def test_empty_page_keeps_column_dtypes(serve_coll):
+    """An empty page is typed like a full one and like the Spark route's
+    toPandas(): an _and whose legs do not intersect, and an offset past
+    the end of a filter result."""
+    coll, X = serve_coll
+    vec = {"property": "v", "vectorVamana": {
+        "vector": [float(x) for x in X[5]], "limit": 5}}
+    full = coll.search({"query": vec, "limit": 5}, route="auto")
+    for req in (
+        {"query": {"property": "_and", "_and": [
+            {"property": "lang", "string": {"operator": "equals",
+                                            "value": "nope"}}, vec]},
+         "limit": 5},
+        {"query": {"property": "n", "integer": {"operator": "equals",
+                                                "value": 3}},
+         "limit": 5, "offset": 50},
+    ):
+        empty = coll.search(req, route="auto")
+        assert len(empty) == 0
+        assert empty.dtypes.to_dict() == full.dtypes.to_dict()
+        spark_empty = coll.search(req).toPandas()
+        assert empty.dtypes.to_dict() == spark_empty.dtypes.to_dict()
+    assert full["n"].dtype == np.int64
+
+
+def test_resident_columns_align_row_for_row(spark, tmp_path):
+    """Every position array relies on this: columns scanned one at a time
+    line up row for row with one scan of all columns, over a snapshot of
+    several files (buckets, an insert, an update and a delete)."""
+    from semadb_spark.plans.local_engine import LocalSearchEngine
+
+    schema = {"lang": SERVE_SCHEMA["lang"], "n": SERVE_SCHEMA["n"],
+              "v": {"type": "vectorFlat", "vectorFlat": {
+                  "vectorSize": 4, "distanceMetric": "euclidean"}}}
+    coll = Collection.create(spark, str(tmp_path / "align"), schema,
+                             num_buckets=3)
+    rng = np.random.RandomState(5)
+
+    def rows(lo, hi):
+        return spark.createDataFrame([
+            Row(_id=f"a{i:03d}", lang=["en", None][i % 2], n=i,
+                v=None if i % 7 == 0 else [float(x) for x in rng.normal(size=4)])
+            for i in range(lo, hi)])
+
+    coll.insert(rows(0, 60))
+    coll.insert(rows(60, 90))
+    coll.update(spark.createDataFrame([Row(_id="a010", n=1000)]))
+    coll.delete(["a020", "a061"])
+    eng = LocalSearchEngine(coll)
+    assert len(eng.files) > 3
+    whole = eng._scan(eng._frame_fields)
+    assert len(whole) == 88
+    for c in eng._frame_fields:
+        one = eng._scan([c])[c]
+        assert [_norm(x) for x in one] == [_norm(x) for x in whole[c]], c
+    # the resident cache (one column per scan) and its per-set frames
+    assert eng._col_frame(["n"])["n"].tolist() == whole["n"].tolist()
+    assert (eng._col_frame(["lang", "n"])["_id"].tolist()
+            == whole["_id"].tolist())
+    # the vector matrix's positions index the same rows
+    pos, X, _ = eng._vec_matrix("v")
+    assert np.array_equal(X, np.stack(whole["v"].to_numpy()[pos]))
+    # a gathered page is the same rows as the whole scan's
+    page = eng._rows_at(np.array([5, 0, 40]))
+    assert list(page["_id"]) == list(whole["_id"].iloc[[5, 0, 40]])
