@@ -462,8 +462,9 @@ class Collection:
         QPS at 8-16 workers vs ~35 for one client (the Spark route stays
         the analytical/batch path). Use as a context manager; reopen after
         ``build_text_index``/``refresh_text_index`` rotate the artifact
-        (the pool detects rebuilds via the artifact fingerprint, but
-        rotation at a request boundary is the clean deployment shape)."""
+        (workers re-check the artifact fingerprint only every ~300 s under
+        traffic, or at the first query after 50 min idle; until then they
+        may serve the old index)."""
         from .operators.text_search import TextServePool
 
         if prop not in self.schema or self.schema[prop].type != "text":

@@ -25,10 +25,13 @@ persist it partitioned/bucketed by term.
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from semadb_spark.functions.analyzer import analyze_query, tokenize
+from semadb_spark.operators._artifact import cached_fingerprint
 
 # Partition count for the persisted index's term-hash layout: queries prune
 # to <= |query terms| directories out of TERM_BUCKETS (Collection
@@ -269,86 +272,10 @@ def text_serve(
 
 
 _LOCAL_DATASET_CACHE: dict[str, tuple[int, object]] = {}
-_LOCAL_RG_INDEX_CACHE: dict[tuple[str, int], tuple[int, object]] = {}
-_FP_AT: dict[str, tuple[float, int]] = {}
-_FP_REFRESHING: set[str] = set()
-_FP_TTL_SEC = 1.0
+_LOCAL_RG_INDEX = threading.local()  # .by_path: path -> (fp, index)
 
 
-def _artifact_fingerprint_cached(index_path: str, ttl: float) -> int:
-    """TTL-cached artifact fingerprint — same contract the vector tier
-    adopted in r9 (vamana._local_decoded_cents): a rebuild is picked up
-    within ~``ttl`` seconds, far inside any artifact-rotation window, and
-    the listing walk (measured ~5 ms on a 64-bucket index, paid TWICE per
-    query via the dataset + row-group caches) amortizes instead of taxing
-    every point-read.
-
-    r14 (VERDICT r13 directive #5, applied to both serving tiers): the
-    refresh is STALE-WHILE-REVALIDATE — once the TTL lapses, the query
-    thread returns the last fingerprint immediately and a daemon thread
-    re-walks the listing, so the walk never lands in a request's latency
-    (it was the p99 tail: at a 1 s TTL one query per second paid the whole
-    walk synchronously). Staleness bound is ~ttl + walk time instead of
-    ttl; only the very first query of a process walks synchronously."""
-    import threading
-    import time as _time
-
-    now = _time.monotonic()
-    hit = _FP_AT.get(index_path)
-    if hit is not None:
-        if now - hit[0] >= ttl and index_path not in _FP_REFRESHING:
-            _FP_REFRESHING.add(index_path)
-
-            def _refresh() -> None:
-                try:
-                    fp = _artifact_fingerprint(index_path)
-                    _FP_AT[index_path] = (_time.monotonic(), fp)
-                finally:
-                    _FP_REFRESHING.discard(index_path)
-
-            threading.Thread(
-                target=_refresh, daemon=True,
-                name=f"fp-refresh:{index_path}",
-            ).start()
-        return hit[1]
-    fp = _artifact_fingerprint(index_path)
-    _FP_AT[index_path] = (now, fp)
-    return fp
-
-
-def _artifact_fingerprint(index_path: str) -> int:
-    """Digest of the artifact's file listing (relative name, size,
-    mtime_ns per data file). Both driver-local caches key on (path,
-    fingerprint): ANY mutation — an in-process write.mode("overwrite")
-    rebuild, a file added/replaced inside one bucket directory, or a
-    rewrite landing within the filesystem's mtime granularity for
-    _SUCCESS — changes the digest, so a subsequent text_serve_local
-    re-opens the new files instead of serving stale postings off pinned
-    ParquetFile handles. Cost: one os.walk of the artifact directory per
-    query (~1 ms for the 66-file 10M index), same order as the single
-    os.stat it replaces."""
-    import os
-    import zlib
-
-    h = 0
-    try:
-        for root, dirs, files in os.walk(index_path):
-            dirs.sort()
-            for fn in sorted(files):
-                try:
-                    st = os.stat(os.path.join(root, fn))
-                except OSError:
-                    continue
-                rel = os.path.relpath(os.path.join(root, fn), index_path)
-                h = zlib.crc32(
-                    f"{rel}:{st.st_size}:{st.st_mtime_ns}".encode(), h
-                )
-    except OSError:
-        return 0
-    return h
-
-
-def _local_rowgroup_index(index_path: str, fp: int | None = None):
+def _local_rowgroup_index(index_path: str, fp: int):
     """bucket -> [(ParquetFile, [(term_min, term_max) per row group])] for
     a term-bucket partitioned posting artifact, built once per (path,
     fingerprint, THREAD) from parquet footers only (no data pages read).
@@ -359,19 +286,16 @@ def _local_rowgroup_index(index_path: str, fp: int | None = None):
     (legacy unsorted artifact) — callers then fall back to the generic
     dataset scan.
 
-    Per-thread keying (r14, VERDICT r13 directive #4): ``ParquetFile`` is
-    not safe for concurrent reads from multiple threads (its reader seeks
-    one underlying handle), so a multi-threaded serving tier gets its own
-    handle set per client thread — each thread an independent engine
-    handle on the immutable artifact, exactly like the process pool. Cost:
-    one footer-only re-open per (thread, file); the decoded data pages are
-    never cached here."""
-    if fp is None:
-        fp = _artifact_fingerprint(index_path)
-    import threading
-
-    cache_key = (index_path, threading.get_ident())
-    hit = _LOCAL_RG_INDEX_CACHE.get(cache_key)
+    Per-thread handles: ``ParquetFile`` is not safe for concurrent reads
+    from multiple threads (its reader seeks one underlying handle), so a
+    multi-threaded serving tier gets its own handle set per client thread —
+    each thread an independent engine handle on the immutable artifact,
+    exactly like the process pool. The index lives in a
+    ``threading.local``, so a thread's handles close when the thread
+    exits. Cost: one footer-only re-open per (thread, file); the decoded
+    data pages are never cached here."""
+    by_path = vars(_LOCAL_RG_INDEX).setdefault("by_path", {})
+    hit = by_path.get(index_path)
     if hit is not None and hit[0] == fp:
         return hit[1]
     import glob
@@ -405,7 +329,7 @@ def _local_rowgroup_index(index_path: str, fp: int | None = None):
                     stats.append((None, None))
             idx.setdefault(b, []).append((pf, stats))
     result = idx if usable else None
-    _LOCAL_RG_INDEX_CACHE[cache_key] = (fp, result)
+    by_path[index_path] = (fp, result)
     return result
 
 
@@ -469,9 +393,7 @@ def text_serve_local(
 
     from semadb_spark.functions.hashing import md5_hash64_py
 
-    fp = _artifact_fingerprint_cached(
-        index_path, _FP_TTL_SEC if fp_ttl_sec is None else fp_ttl_sec
-    )
+    fp = cached_fingerprint(index_path, fp_ttl_sec)
     hit = _LOCAL_DATASET_CACHE.get(index_path)
     if hit is not None and hit[0] == fp:
         dset = hit[1]
@@ -733,7 +655,7 @@ def _pool_init(index_path: str, num_docs: int) -> None:
     global _POOL_INDEX_PATH, _POOL_NUM_DOCS
     _POOL_INDEX_PATH = index_path
     _POOL_NUM_DOCS = num_docs
-    _local_rowgroup_index(index_path)
+    _local_rowgroup_index(index_path, cached_fingerprint(index_path, 300.0))
 
 
 def _pool_serve(args: tuple[str, str, int, float]):
@@ -766,11 +688,14 @@ class TextServePool:
     it, heavy analytical batches go through the cluster
     (:func:`text_search_batch`).
 
-    Contract: the artifact must be immutable while the pool is open.
-    Mutations are still DETECTED (each worker's caches key on the artifact
-    fingerprint, so a rebuilt index is re-opened, not served stale), but
-    the pool gives no ordering guarantee for queries in flight across a
-    swap — rotate pools on reindex like Collection rotates snapshots.
+    Contract: the artifact must be immutable while the pool is open. Each
+    worker's caches key on the artifact fingerprint, cached with a 300 s
+    TTL (staleness contract: ``operators/_artifact.py``): under traffic a
+    worker re-opens a rebuilt index within about 300 s plus one listing
+    walk, and after more than 50 min idle its next query re-walks first.
+    Until then a worker may serve the old postings, and the pool gives no
+    ordering guarantee for queries in flight across a swap — rotate pools
+    on reindex like Collection rotates snapshots.
 
     Results are byte-identical to :func:`text_serve_local`
     (parity-tested), which is itself pinned to the SQL path

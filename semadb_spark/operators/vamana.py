@@ -32,6 +32,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from semadb_spark.operators._artifact import cached_fingerprint, seed_fingerprint
+
 __all__ = [
     "VamanaIndex",
     "vamana_build",
@@ -2227,34 +2229,6 @@ def vamana_serve_packed(
 # -- driver-local point-read serving (no Spark job) -------------------------
 
 _LOCAL_PACKED_CACHE: dict[str, tuple[tuple, dict]] = {}
-_LOCAL_PACKED_FP_AT: dict[str, tuple[float, int]] = {}
-_FP_REFRESHING: set[str] = set()
-_FP_TTL_SEC = 1.0
-
-
-def _packed_artifact_fingerprint(path: str) -> int:
-    """Listing digest (name/size/mtime_ns per file) — same invalidation
-    contract as text_search._artifact_fingerprint: ANY rewrite of the
-    artifact re-opens it instead of serving stale decoded shards."""
-    import os
-    import zlib
-
-    h = 0
-    try:
-        for root, dirs, files in os.walk(path):
-            dirs.sort()
-            for fn in sorted(files):
-                try:
-                    st = os.stat(os.path.join(root, fn))
-                except OSError:
-                    continue
-                rel = os.path.relpath(os.path.join(root, fn), path)
-                h = zlib.crc32(f"{rel}:{st.st_size}:{st.st_mtime_ns}".encode(), h)
-    except OSError:
-        return 0
-    return h
-
-
 MAX_CACHED_CENTS = 256
 """Serve-cache FIFO capacity (cent partitions). Shared by
 :func:`_local_decoded_cents` (eviction) and :func:`preload_packed_local`
@@ -2272,48 +2246,15 @@ def _local_decoded_cents(path: str, cents_needed: list[int], np_dtype,
     FIFO-evicts whole cent entries past ``max_cached_cents`` (a hot
     serving node keeps its working set decoded, exactly like the
     reference's shard decode cache, cache/manager.go:39-303)."""
-    import time as _time
-
     import pyarrow.dataset as pads
 
-    # fingerprint with a short TTL: the listing walk costs ~100 ms on a
-    # 3000-file 10M artifact — paying it per POINT-READ was 73% of the
-    # query latency (r9 profile). A rebuild is still picked up within
-    # the TTL, which is far inside any artifact-rotation window. Callers
+    # cached fingerprint (staleness contract: operators/_artifact.py): the
+    # listing walk costs ~100 ms on a 3000-file 10M artifact — paying it
+    # per POINT-READ was 73% of the query latency (r9 profile). Callers
     # holding the immutable-artifact contract (VectorServePool workers)
     # pass a LONG fp_ttl_sec: at the 1 s default a pool worker re-walked
     # the listing every ~55 queries — measured ~10% of mp16 throughput.
-    if fp_ttl_sec is None:
-        fp_ttl_sec = _FP_TTL_SEC
-    now = _time.monotonic()
-    cached_at = _LOCAL_PACKED_FP_AT.get(path)
-    if cached_at is not None:
-        # r14 (VERDICT r13 directive #5): stale-while-revalidate — a lapsed
-        # TTL returns the last fingerprint immediately and refreshes the
-        # ~100 ms listing walk (3000-file 10M artifact) on a daemon thread,
-        # so the walk never lands inside a point-read (it WAS the p99 tail:
-        # at the 1 s TTL one query per second paid it synchronously).
-        # Staleness bound ~ttl + walk instead of ttl; the first query of a
-        # process still walks synchronously.
-        if now - cached_at[0] >= fp_ttl_sec and path not in _FP_REFRESHING:
-            import threading
-
-            _FP_REFRESHING.add(path)
-
-            def _refresh() -> None:
-                try:
-                    new_fp = _packed_artifact_fingerprint(path)
-                    _LOCAL_PACKED_FP_AT[path] = (_time.monotonic(), new_fp)
-                finally:
-                    _FP_REFRESHING.discard(path)
-
-            threading.Thread(
-                target=_refresh, daemon=True, name=f"fp-refresh:{path}"
-            ).start()
-        fp = cached_at[1]
-    else:
-        fp = _packed_artifact_fingerprint(path)
-        _LOCAL_PACKED_FP_AT[path] = (now, fp)
+    fp = cached_fingerprint(path, fp_ttl_sec)
     key = (fp, str(c_dtype))
     hit = _LOCAL_PACKED_CACHE.get(path)
     if hit is None or hit[0] != key:
@@ -2495,7 +2436,9 @@ def export_packed_shared(path: str, *, dtype: str = "float32",
     decoded = _local_decoded_cents(
         path, cents, np_dtype, c_dtype, fp_ttl_sec=fp_ttl_sec
     )
-    fp = _LOCAL_PACKED_FP_AT[path][1]
+    # the fingerprint the decode was cached under: a background refresh
+    # may already have replaced the cached fingerprint itself
+    fp = _LOCAL_PACKED_CACHE[path][0][0]
 
     # pass 1: layout. ids become fixed-width '<U' arrays (UTF-32) so they
     # share too; empty shards record width 0 and attach as empty arrays.
@@ -2610,9 +2553,7 @@ def attach_packed_shared(path: str, shm_name: str, manifest: dict) -> int:
         cache[int(cent)] = shards
     key = (manifest["fp"], manifest["c_dtype"])
     _LOCAL_PACKED_CACHE[path] = (key, cache)
-    import time as _time
-
-    _LOCAL_PACKED_FP_AT[path] = (_time.monotonic(), manifest["fp"])
+    seed_fingerprint(path, manifest["fp"])
     return len(cache)
 
 
@@ -2885,7 +2826,7 @@ def _vpool_init(packed_path: str, kw: dict) -> None:
     global _VPOOL_PATH, _VPOOL_KW
     _VPOOL_PATH = packed_path
     _VPOOL_KW = kw
-    _packed_artifact_fingerprint(packed_path)
+    cached_fingerprint(packed_path, kw["fp_ttl_sec"])
 
 
 def _vpool_serve(args: tuple[list, int]):
@@ -2926,10 +2867,13 @@ class VectorServePool:
     decodes those too (bounded overlap, same trade the reference makes
     replicating hot shards).
 
-    Contract: the artifact must be immutable while the pool is open —
-    mutations are still DETECTED per worker (the decoded cache keys on the
-    artifact fingerprint), but rotate pools on reindex like Collection
-    rotates snapshots. Results are identical to :func:`vamana_serve_local`
+    Contract: the artifact must be immutable while the pool is open. Each
+    worker's decoded cache keys on the artifact fingerprint, cached with a
+    300 s TTL (staleness contract: ``operators/_artifact.py``): under
+    traffic a worker re-decodes a rebuilt artifact within about 300 s plus
+    one listing walk, and after more than 50 min idle its next query
+    re-walks first. Until then it may serve the old graph — rotate pools
+    on reindex like Collection rotates snapshots. Results are identical to :func:`vamana_serve_local`
     (same function, parity-tested), which is itself pinned to
     :func:`vamana_serve_packed`.
 

@@ -621,7 +621,7 @@ def test_text_serve_local_matches_text_serve(products, tmp_path):
 def test_text_serve_local_thread_handles_isolated_and_consistent(
     products, tmp_path
 ):
-    """r14: the per-bucket row-group index is keyed per (path, fingerprint,
+    """The per-bucket row-group index is held per (path, fingerprint,
     THREAD) — ParquetFile handles are not safe for concurrent reads, so a
     multi-threaded serving tier must get its own handle set per client
     thread, and concurrent queries must return exactly what sequential ones
@@ -634,7 +634,7 @@ def test_text_serve_local_thread_handles_isolated_and_consistent(
     from semadb_spark.functions.hashing import md5_hash64
     from semadb_spark.operators.text_search import (
         TERM_BUCKETS,
-        _LOCAL_RG_INDEX_CACHE,
+        _LOCAL_RG_INDEX,
         build_text_index,
         text_serve_local,
     )
@@ -655,36 +655,33 @@ def test_text_serve_local_thread_handles_isolated_and_consistent(
         .to_dict("records")
         for q in queries
     }
+
+    def first_handle():
+        # this thread's ParquetFile for the lowest bucket of the artifact
+        idx = vars(_LOCAL_RG_INDEX)["by_path"][path][1]
+        return idx[min(idx)][0][0]
+
+    handles = {}  # serving thread ident -> its handle (kept alive here)
+
+    def serve(q):
+        got = text_serve_local(
+            path, q, "containsAny", limit=5, num_docs=n_docs
+        ).to_dict("records")
+        handles.setdefault(threading.get_ident(), first_handle())
+        return got
+
     results = {}
     with ThreadPoolExecutor(4) as ex:
-        for q, got in zip(
-            queries * 8,
-            ex.map(
-                lambda q: text_serve_local(
-                    path, q, "containsAny", limit=5, num_docs=n_docs
-                ).to_dict("records"),
-                queries * 8,
-            ),
-        ):
+        for q, got in zip(queries * 8, ex.map(serve, queries * 8)):
             results.setdefault(q, []).append(got)
     for q, runs in results.items():
         for got in runs:
             assert got == want[q], q
-    # each serving thread built its own handle set for this path
-    thread_keys = {
-        k for k in _LOCAL_RG_INDEX_CACHE if isinstance(k, tuple) and k[0] == path
-    }
-    assert len(thread_keys) >= 2
-    main_key = (path, threading.get_ident())
-    others = [k for k in thread_keys if k != main_key]
-    if main_key in _LOCAL_RG_INDEX_CACHE and others:
-        pf_main = _LOCAL_RG_INDEX_CACHE[main_key][1]
-        pf_other = _LOCAL_RG_INDEX_CACHE[others[0]][1]
-        shared = [
-            b for b in pf_main if b in pf_other and pf_main[b] and pf_other[b]
-        ]
-        if shared:
-            assert pf_main[shared[0]][0][0] is not pf_other[shared[0]][0][0]
+    # each serving thread built its own handle set for this path, distinct
+    # from the main thread's and from each other's
+    assert len(handles) >= 2
+    all_handles = [first_handle(), *handles.values()]
+    assert len({id(h) for h in all_handles}) == len(all_handles)
 
 
 def test_text_serve_local_mixed_stats_rowgroups_must_read(products, tmp_path):
@@ -786,12 +783,12 @@ def test_text_serve_local_cache_invalidated_on_rebuild(products, tmp_path):
     # filesystem's mtime granularity makes both writes land on one tick
     os.utime(os.path.join(path, "_SUCCESS"))
     time.sleep(0.01)
-    # the fingerprint walk runs at most once per _FP_TTL_SEC (r10, the
-    # same trade the vector tier made in r9); a serve inside the TTL
-    # window may still see the old artifact — model the TTL elapsing
-    from semadb_spark.operators import text_search as ts
+    # the fingerprint is cached with a TTL (operators/_artifact.py); a
+    # serve inside the TTL window may still see the old artifact — model
+    # the TTL elapsing by dropping the cached entry
+    from semadb_spark.operators import _artifact
 
-    ts._FP_AT.pop(path, None)  # = TTL elapsed
+    _artifact._AT.pop(path, None)  # = TTL elapsed
     second = text_serve_local(path, "gandalf", "containsAny", num_docs=n2)
     assert len(second) == 0, "stale postings served after in-place rebuild"
     assert len(text_serve_local(path, "nobody", "containsAny", num_docs=n2)) > 0

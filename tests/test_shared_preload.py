@@ -5,75 +5,24 @@ a POSIX shared-memory segment; `attach_packed_shared` gives any process
 zero-copy numpy views over the same physical pages — the pool analogue of
 the reference's single shared shard decode cache (cache/manager.go:39-303).
 These tests are Spark-free: they synthesize the packed artifact with
-pyarrow directly (the exact schema `_local_decoded_cents` reads) so the
-memory accounting is not polluted by a JVM.
+pyarrow directly (the ``write_fake_packed`` fixture in conftest.py, the
+exact schema `_local_decoded_cents` reads) so the memory accounting is not
+polluted by a JVM.
 """
 
 from __future__ import annotations
 
 import multiprocessing
-import os
 
 import numpy as np
-import pyarrow as pa
-import pyarrow.parquet as pq
-import pytest
 
+from semadb_spark.operators import _artifact
 from semadb_spark.operators import vamana as V
-
-
-def _write_fake_packed(path: str, *, cents: int = 1, n: int = 500,
-                       d: int = 16, degree: int = 4, with_codes: bool = False,
-                       seed: int = 7) -> dict:
-    """Write a packed artifact (hive `cent=` partitions, one shard row per
-    cent) in the exact layout vamana_pack persists and
-    `_local_decoded_cents` decodes: vecs/indptr/indices as raw buffers,
-    ids as list<string>, shard name `{cent}_0`."""
-    rng = np.random.RandomState(seed)
-    truth = {}
-    for c in range(cents):
-        X = rng.normal(size=(n, d)).astype(np.float32)
-        indptr = np.arange(n + 1, dtype=np.int32) * degree
-        indices = rng.randint(0, n, size=n * degree).astype(np.int32)
-        ids = [f"p{c}_{i:06d}" for i in range(n)]
-        row = {
-            "shard": f"{c}_0",
-            "n": n,
-            "ids": ids,
-            "vecs": X.tobytes(),
-            "indptr": indptr.tobytes(),
-            "indices": indices.tobytes(),
-            "start": 0,
-        }
-        fields = [
-            pa.field("shard", pa.string()), pa.field("n", pa.int64()),
-            pa.field("ids", pa.list_(pa.string())),
-            pa.field("vecs", pa.binary()), pa.field("indptr", pa.binary()),
-            pa.field("indices", pa.binary()), pa.field("start", pa.int64()),
-        ]
-        if with_codes:
-            words = (d + 63) // 64
-            codes = rng.randint(0, 256, size=(n, words * 8)).astype(np.uint8)
-            row["codes"] = codes.tobytes()
-            row["code_words"] = words
-            fields += [pa.field("codes", pa.binary()),
-                       pa.field("code_words", pa.int64())]
-            truth.setdefault(c, {})["codes"] = codes
-        tbl = pa.table(
-            {k: [row[k]] for k in [f.name for f in fields]},
-            schema=pa.schema(fields),
-        )
-        part = os.path.join(path, f"cent={c}")
-        os.makedirs(part, exist_ok=True)
-        pq.write_table(tbl, os.path.join(part, "part-0.parquet"))
-        truth.setdefault(c, {}).update(X=X, indptr=indptr, indices=indices,
-                                       ids=ids)
-    return truth
 
 
 def _drop_local_state(path: str) -> None:
     V._LOCAL_PACKED_CACHE.pop(path, None)
-    V._LOCAL_PACKED_FP_AT.pop(path, None)
+    _artifact._AT.pop(path, None)
     shm = V._SHM_ATTACHED.pop(path, None)
     if shm is not None:
         try:
@@ -82,12 +31,12 @@ def _drop_local_state(path: str) -> None:
             pass  # views still alive in this test process
 
 
-def test_export_attach_roundtrip(tmp_path):
+def test_export_attach_roundtrip(tmp_path, write_fake_packed):
     """export -> attach reproduces the private decode bit-for-bit (vectors,
     CSR, padded adjacency, seed order, baked BQ codes incl. the uint64
     view), drops the exporter's private copy, and marks views read-only."""
     path = str(tmp_path / "packed")
-    truth = _write_fake_packed(path, cents=2, n=300, d=64, with_codes=True)
+    truth = write_fake_packed(path, cents=2, n=300, d=64, with_codes=True)
 
     # baseline: private decode (copy everything out so we can compare
     # after the cache is dropped)
@@ -144,11 +93,11 @@ def test_export_attach_roundtrip(tmp_path):
     V.release_packed_shared(shm_name)
 
 
-def test_export_oversized_stays_lazy(tmp_path):
+def test_export_oversized_stays_lazy(tmp_path, write_fake_packed):
     """An artifact wider than the serve-cache cap refuses to export — the
     pool keeps per-worker lazy faulting (preload_packed_local's bound)."""
     path = str(tmp_path / "packed_wide")
-    _write_fake_packed(path, cents=3, n=20, d=4)
+    write_fake_packed(path, cents=3, n=20, d=4)
     assert V.export_packed_shared(path, max_cents=2) is None
     _drop_local_state(path)
 
@@ -183,7 +132,7 @@ def _child_measure(path, mode, shm_name, manifest, q):
         q.put(("err", repr(e), 0.0))
 
 
-def test_shared_attach_is_one_copy_across_processes(tmp_path):
+def test_shared_attach_is_one_copy_across_processes(tmp_path, write_fake_packed):
     """The r12 directive's pin: N pool workers attached to the shared
     export must NOT each pay the artifact in private resident memory.
     A fork child that decodes PRIVATELY grows its USS by ~the artifact
@@ -194,7 +143,7 @@ def test_shared_attach_is_one_copy_across_processes(tmp_path):
     # ~25 MB vectors + ~6 MB adjacency: big enough that sharing vs copying
     # is unambiguous over allocator noise
     n, d = 100_000, 64
-    _write_fake_packed(path, n=n, d=d, degree=4)
+    write_fake_packed(path, n=n, d=d, degree=4)
     art_bytes = n * d * 4
 
     exp = V.export_packed_shared(path)
@@ -222,12 +171,12 @@ def test_shared_attach_is_one_copy_across_processes(tmp_path):
     V.release_packed_shared(shm_name)
 
 
-def test_pool_worker_attaches_shared(tmp_path):
+def test_pool_worker_attaches_shared(tmp_path, write_fake_packed):
     """End-to-end pool plumbing without Spark: _hpool_init with
     shared_graphs attaches the segment (no private decode), and the
     serve cache is populated for the engine that follows."""
     path = str(tmp_path / "packed_pool")
-    _write_fake_packed(path, cents=1, n=200, d=8)
+    write_fake_packed(path, cents=1, n=200, d=8)
     exp = V.export_packed_shared(path)
     assert exp is not None
     shm_name, manifest = exp

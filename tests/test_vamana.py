@@ -8,6 +8,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from semadb_spark.operators import _artifact
 from semadb_spark.operators import vamana as vm
 from semadb_spark.operators.knn import knn_topk
 
@@ -903,14 +904,14 @@ def test_vamana_serve_local_matches_packed(spark, emb, tmp_path):
             ]
             assert got == want, (nprobe, qi)
     # artifact rewrite invalidates the decoded cache once the fingerprint
-    # TTL lapses (the listing walk runs at most once per _FP_TTL_SEC; a
-    # serve inside the TTL window may still see the old artifact — the
+    # TTL lapses (the cached fingerprint, operators/_artifact.py; a serve
+    # inside the TTL window may still see the old artifact — the
     # documented trade for not paying a 3000-file walk per point-read)
     assert d in vm._LOCAL_PACKED_CACHE
     old_fp = vm._LOCAL_PACKED_CACHE[d][0]
     vm.vamana_pack(index.shard_nodes, index.shard_edges, dtype="float32") \
         .write.mode("overwrite").partitionBy("cent").parquet(d)
-    vm._LOCAL_PACKED_FP_AT.pop(d, None)  # = TTL elapsed
+    _artifact._AT.pop(d, None)  # = TTL elapsed
     qv = [float(x) for x in rows[0]["v"]]
     vm.vamana_serve_local(d, qv, 5, metric="euclidean", search_size=40,
                           centroids=index.centroids, dtype="float32")
